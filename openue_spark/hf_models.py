@@ -1,6 +1,6 @@
 """Real-model adapters for the extraction weights seam.
 
-The fused/staged extractors resolve their forwards through
+The extractor resolves its forwards through
 ``pipeline.extract._forwards``: any broadcast object exposing
 
     seq_probs_batch(padded_ids: (n, L) uint64)            -> (n, R) float64

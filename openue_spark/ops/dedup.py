@@ -1,10 +1,14 @@
 """Large-scale deduplication operators (training-data pipeline ops).
 
 Exact, MinHash+LSH, SimHash, and n-gram-Jaccard dedup over a text corpus.
-Every operator here is expressed with built-in column expressions (JVM-side,
-whole-stage codegen) — no Python UDFs — and each has an equivalent DuckDB
-oracle (openue_spark.contract) via an md5 hash mode, which both engines
-implement identically:
+Operators are built-in column expressions (JVM-side, whole-stage codegen)
+except three Arrow-batched numpy kernels: the SimHash fingerprint pass
+(`with_simhash`, mapInPandas, pinned bit-equal to its SQL form
+`with_simhash_expr`) and the embedding near-dup verifies
+(`embedding_near_dup_pairs` / `embedding_near_dup_bucketed`,
+applyInPandas). Each operator has an equivalent DuckDB oracle
+(openue_spark.contract) via an md5 hash mode, which both engines implement
+identically:
 
 - MinHash signature component i  = min over shingles of hash(shingle || '#i')
   (min over uniformly-distributed hash values is a valid min-hash). The
@@ -413,7 +417,8 @@ def with_simhash(corpus: DataFrame) -> DataFrame:
     memoized per batch (corpus vocabularies repeat heavily); only
     (doc_id, tokens) crosses into Python and (doc_id, simhash) crosses
     back. Bit 63 wraps to a negative signed bigint exactly like the SQL
-    form (uint64 accumulate, reinterpreted int64)."""
+    form (uint64 accumulate, reinterpreted int64). Empty and NULL token
+    arrays (and arrays holding a NULL token) give 0, as the SQL form does."""
     from pyspark.sql import types as T
 
     prepped = corpus.select("doc_id", "tokens")
@@ -446,41 +451,28 @@ def with_simhash(corpus: DataFrame) -> DataFrame:
             np.ones(64, dtype=np.uint64), np.arange(64, dtype=np.uint64)
         )
         for pdf in batches:
-            toks_col = list(pdf["tokens"])
+            # A NULL array, or one holding a NULL token, fingerprints to 0
+            # like the SQL form (its vote folds go NULL and every CASE takes
+            # the ELSE 0 branch); counting it as an empty doc does that.
+            docs = [
+                () if d is None or None in d else d for d in pdf["tokens"]
+            ]
             counts = np.fromiter(
-                (len(t) for t in toks_col), dtype=np.int64, count=len(toks_col)
+                (len(d) for d in docs), dtype=np.int64, count=len(docs)
             )
-            flat = [words(t) for doc in toks_col for t in doc]
-            if len(flat) == 0 or (counts == 0).any():
-                # degenerate docs (empty token arrays) — per-doc fallback,
-                # never hit for whitespace-split corpora ([''] has size 1)
-                fps = []
-                for doc in toks_col:
-                    votes = np.zeros(64, dtype=np.int64)
-                    for t in doc:
-                        w0, w1 = words(t)
-                        b = np.concatenate(
-                            [(w0 >> shifts) & 1, (w1 >> shifts) & 1]
-                        )
-                        votes += 2 * b - 1
-                    fps.append(
-                        int(
-                            ((votes > 0).astype(np.uint64) * weights)
-                            .sum(dtype=np.uint64)
-                            .view(np.int64)
-                        )
-                    )
-                yield pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "simhash": np.array(fps, dtype=np.int64)}
-                )
-                continue
-            W = np.array(flat, dtype=np.int64)  # N x 2
+            W = np.array(
+                [words(t) for d in docs for t in d], dtype=np.int64
+            ).reshape(-1, 2)
             B = np.concatenate(
                 [(W[:, 0:1] >> shifts) & 1, (W[:, 1:2] >> shifts) & 1], axis=1
             )  # N x 64 in token order
-            offs = np.zeros(len(counts), dtype=np.int64)
-            np.cumsum(counts[:-1], out=offs[1:])
-            S = np.add.reduceat(B, offs, axis=0)  # docs x 64 popcounts
+            # docs x 64 popcounts; an empty doc owns no slice, so reduceat
+            # runs over the non-empty docs' start offsets and leaves it 0
+            S = np.zeros((len(docs), 64), dtype=np.int64)
+            nonempty = counts > 0
+            if nonempty.any():
+                starts = np.cumsum(counts) - counts
+                S[nonempty] = np.add.reduceat(B, starts[nonempty], axis=0)
             votes = 2 * S - counts[:, None]
             fp = (
                 ((votes > 0).astype(np.uint64) * weights[None, :])
@@ -835,8 +827,10 @@ def embedding_near_dup_pairs(embeddings: DataFrame, min_cosine: float = 0.95) ->
     )
     sc = embeddings.sparkSession.sparkContext
     n_blocks = max(4, int(2 * sc.defaultParallelism ** 0.5))
+    # blocks only partition the all-pairs work; hashing the id first lets
+    # any id type (string, bigint, ...) pick one
     tagged = q.withColumn(
-        "gid", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int")
+        "gid", F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int")
     )
     replicated = tagged.select(
         "vec_id",

@@ -94,6 +94,7 @@ def extract_turn(
     num_relations: int = NUM_RELATIONS,
     max_seq_length: int = MAX_SEQ_LENGTH,
     encode_fn=None,
+    model=None,
 ) -> list[tuple[int, str, str]]:
     """Full reference pipeline on one sentence -> [(rel_id, subj, obj), ...].
 
@@ -102,11 +103,15 @@ def extract_turn(
     oracle runs sentence-at-a-time. `encode_fn` is the tokenizer seam
     (``(text, max_length) -> (ids, words)``; None = built-in word-level)
     — mirror of the pipeline's `tokenizer_bc` so parity can be asserted
-    under any injected tokenizer.
+    under any injected tokenizer. `model` is the weights seam: an object
+    with ``seq_probs_batch``/``ner_tags_batch`` (see hf_models), called on
+    the 1-row uint64 id matrix; None = the built-in mock scorers.
     """
     ids, words = (encode_fn or encode)(text, max_seq_length - 2)
-    ids_arr = np.asarray(ids, dtype=np.int64)
-    probs = seq_probs(ids_arr, num_relations)
+    if model is None:
+        probs = seq_probs(np.asarray(ids, dtype=np.int64), num_relations)
+    else:
+        probs = model.seq_probs_batch(np.asarray([ids], dtype=np.uint64))[0]
     selected = probs > SIGMOID_THRESHOLD
     if not selected.any():
         selected[int(np.argmax(probs))] = True  # first max index (torch.max)
@@ -116,7 +121,12 @@ def extract_turn(
     for k in np.nonzero(selected)[0]:
         k = int(k)
         spliced = ids + [REL_TOKEN_BASE + k, SEP_ID]
-        tags = ner_tags(np.asarray(spliced, dtype=np.int64), k)
+        if model is None:
+            tags = ner_tags(np.asarray(spliced, dtype=np.int64), k)
+        else:
+            tags = model.ner_tags_batch(
+                np.asarray([spliced], dtype=np.uint64), np.array([k])
+            )[0]
         tag_strs = [NER_LABELS[t] for t in tags[: rel_pos - 1]]
         subjects, objects = bio_decode_spans(tag_strs)
         if subjects and objects:
@@ -127,13 +137,13 @@ def extract_turn(
 
 
 def extract_corpus(
-    rows: list[tuple[str, int, str]], encode_fn=None
+    rows: list[tuple[str, int, str]], encode_fn=None, model=None
 ) -> list[Triple]:
     """rows: (conv_id, turn_idx, text) -> reference triples (with duplicates,
     as the reference emits them; dedup is a separate downstream stage).
-    `encode_fn` as in `extract_turn`."""
+    `encode_fn` and `model` as in `extract_turn`."""
     triples: list[Triple] = []
     for conv_id, turn_idx, text in rows:
-        for rel_id, subj, obj in extract_turn(text, encode_fn=encode_fn):
+        for rel_id, subj, obj in extract_turn(text, encode_fn=encode_fn, model=model):
             triples.append(Triple(conv_id, turn_idx, subj, rel_id, ID2REL[rel_id], obj))
     return triples

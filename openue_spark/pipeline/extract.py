@@ -1,34 +1,27 @@
 """Spark-native two-stage interaction extraction pipeline.
 
 Re-expresses the reference's `Inference.forward`
-(/root/reference/src/openue/models/model.py:199-393) as a declarative
-DataFrame plan. Two equivalent physical forms, pinned bit-identical by
-tests/test_parity.py::test_fused_equals_staged:
+(OpenUE src/openue/models/model.py:199-393) as ONE mapInPandas
+pass over the transcripts (`_fused_extract_fn`): one Python runner per
+task, one Arrow round-trip, tokenization shared across both model stages.
+Its output is pinned to the numpy reference `oracle.extract_corpus` by
+tests/test_parity.py and to the checked-in golden parquet by the contract's
+extract_diff_vs_golden row.
 
-- FUSED (default, `extract_triples(...)`): the whole chain in ONE
-  mapInPandas pass — one Python runner per task, one Arrow round-trip,
-  tokenization shared across both model stages. Measured 3x the staged
-  wall-clock at sf0.1 (same session, same data).
-- STAGED (`fused=False`): the relational decomposition below, whose
-  intermediate stages are individually DuckDB-oracle-checked by the
-  driver contract (P5/P6/J1/U4 queries).
+Stage mapping inside the generator (SURVEY.md §2):
 
-Staged stage mapping (SURVEY.md §2):
-
-  P1/P2  lowercase + tokenize      -> mapInPandas (Arrow batches)
-  U1     SEQ relation scoring      -> same mapInPandas pass (one Arrow trip)
-  P5/P6  threshold + argmax fallback -> pure array expressions (no shuffle,
-         no window): filter(transform(probs, ...)) with a first-argmax
-         fallback via array_position(probs, array_max(probs))
-  J1     relation-conditioned fan-out -> explode(selected) — the dense
-         expand-then-masked_select GPU idiom (model.py:236-264) is
-         deliberately NOT copied; filter-before-explode is the relational
-         phrasing and Catalyst keeps it narrow
-  U4     marker splice             -> concat(ids, array(REL_BASE+rel_id, SEP))
-         pure column ops (model.py:276-304)
+  P1/P2  lowercase + tokenize      -> per-row encode, zero-padded id matrix
+  U1     SEQ relation scoring      -> one batched forward per Arrow batch
+  P5/P6  threshold + argmax fallback -> boolean mask + first-argmax fill
+  J1     relation-conditioned fan-out -> np.nonzero over the mask (row-major,
+         ascending rel order like the reference's masked_select,
+         model.py:236-264)
+  U4     marker splice             -> ids + [REL_BASE+rel_id, SEP]
+         (model.py:276-304)
   U2/A7/W4/W3  NER forward + argmax + suffix slice + BIO decode
-                                   -> second mapInPandas pass
-  J3     subject x object cartesian -> two explodes (cross within the row)
+                                   -> one batched forward + the vectorized
+                                      `_decode_spans_batch`
+  J3     subject x object cartesian -> per fan-out row, both sides non-empty
   A3     per-sentence regroup      -> unnecessary: conv_id/turn_idx are
          carried through the fan-out (the reference's prefix-sum slicing,
          model.py:337-346, is a batch-tensor artifact)
@@ -38,8 +31,8 @@ Scale notes (100 TB / 10^12 turns):
   triple stream. Parallelism = input partitions; no skew surface.
 - Model "weights" here are the deterministic mock scorers (module-level
   constants, imported once per Python worker). With real weights, swap in a
-  broadcast blob + module-global lazy init inside the same two mapInPandas
-  generators; the plan shape does not change.
+  broadcast blob + module-global lazy init inside the same mapInPandas
+  generator; the plan shape does not change.
 - The only shuffles in the full job are the final dedup/groupBys in
   materialize.py, where skew salting + AQE apply.
 """
@@ -57,7 +50,6 @@ from pyspark.sql import types as T
 from ..config import (
     MAX_SEQ_LENGTH,
     NER_LABELS,
-    NUM_RELATIONS,
     PREDICATES,
     REL_TOKEN_BASE,
     SEP_ID,
@@ -66,28 +58,7 @@ from ..config import (
 from ..hashing import poly_hash_batch
 from ..mock_models import ner_tags_batch, seq_probs_batch
 from ..oracle import span_text
-from ..tokenizer import encode, tokenize_words
-
-_SCORED_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("ids", T.ArrayType(T.IntegerType())),
-        T.StructField("text", T.StringType()),
-        T.StructField("probs", T.ArrayType(T.DoubleType())),
-    ]
-)
-
-_DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("rel_id", T.IntegerType()),
-        T.StructField("subjects", T.ArrayType(T.StringType())),
-        T.StructField("objects", T.ArrayType(T.StringType())),
-    ]
-)
-
+from ..tokenizer import encode
 
 def _forwards(weights):
     """Resolve the (seq, ner) batch forwards for a broadcast weights object.
@@ -111,78 +82,6 @@ def _forwards(weights):
         def ner_fwd(padded, rels):
             return ner_tags_batch(padded, rels, weights=weights)
     return seq_fwd, ner_fwd
-
-
-def _tokenize_and_score_fn(weights_bc=None, tokenizer_bc=None):
-    """P1+P2+U1 in one Arrow pass: text -> (ids, words, per-relation probs).
-
-    Iterator form so per-worker init happens once, not per batch: the
-    optional `weights_bc` is an ``sc.broadcast(MockWeights)`` fetched via
-    `.value` inside the generator — one deserialize per Python worker
-    process (pyspark Broadcast caches the value), exactly the seam real
-    BERT weights would use. `tokenizer_bc` is the matching tokenizer seam
-    (an object with ``encode(text, max_length) -> (ids, words)``, e.g.
-    tokenizer.SubwordTokenizer; None uses the built-in word-level encode —
-    the reference's real subword vocab would ride this broadcast,
-    data_module.py:25-35). The model forward is batched across the whole
-    Arrow batch (seq_probs_batch over zero-padded ids) — per-row numpy
-    calls cost ~30us/turn in call overhead alone, the batched matrix form
-    ~1us/turn; pad-to-batch-max is the dynamic-batching policy.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = weights_bc.value if weights_bc is not None else None
-        seq_fwd, _ner_fwd = _forwards(weights)
-        enc = tokenizer_bc.value.encode if tokenizer_bc is not None else encode
-        max_len = MAX_SEQ_LENGTH - 2  # interactive tokenize bound (utils.py:579-584)
-        for pdf in batches:
-            n = len(pdf)
-            ids_col: list[list[int]] = []
-            max_l = 0
-            texts = pdf["text"].to_numpy()
-            for text in texts:
-                ids, _words = enc(text, max_len)
-                ids_col.append(ids)
-                if len(ids) > max_l:
-                    max_l = len(ids)
-            padded = np.zeros((n, max_l), dtype=np.uint64)
-            for i, ids in enumerate(ids_col):
-                padded[i, : len(ids)] = ids
-            probs = seq_fwd(padded)
-            # `text` (ONE string) flows downstream instead of the words
-            # array<string>: the fan-out multiplies every carried byte, and
-            # Arrow-serializing ~25 small strings per row both ways was a
-            # measurable share of memory bandwidth; stage 2 re-tokenizes.
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].to_numpy(),
-                    "turn_idx": pdf["turn_idx"].to_numpy(),
-                    "ids": ids_col,
-                    "text": texts,
-                    "probs": list(probs),
-                }
-            )
-
-    return gen
-
-
-def _ner_decode_fn(weights_bc=None, tokenizer_bc=None):
-    """U2+A7+W4+W3 in one Arrow pass over the fanned-out (turn, relation) rows.
-
-    Consumes the *spliced* sequence built by column ops upstream, so any
-    splice defect changes every mock tag (poly_hash of the full sequence)
-    and breaks parity — deliberate test power. `weights_bc` /
-    `tokenizer_bc` as in `_tokenize_and_score_fn` (the decode stage
-    re-tokenizes to rebuild span surface words, so it needs the SAME
-    tokenizer the scoring stage used).
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = weights_bc.value if weights_bc is not None else None
-        tok = tokenizer_bc.value if tokenizer_bc is not None else None
-        yield from _ner_decode_batches(batches, weights, tok)
-
-    return gen
 
 
 _TAG_O = NER_LABELS.index("O")
@@ -225,56 +124,6 @@ def _decode_spans_batch(tags_mat: np.ndarray, lengths: np.ndarray):
     return rows, starts, ends, tags_mat[rows, starts]
 
 
-def _ner_decode_batches(
-    batches: Iterator[pd.DataFrame], weights, tok=None
-) -> Iterator[pd.DataFrame]:
-    _seq_fwd, ner_fwd = _forwards(weights)
-    for pdf in batches:
-        spliced_arr = pdf["spliced"].to_numpy()
-        text_arr = pdf["text"].to_numpy()
-        rel_arr = pdf["rel_id"].to_numpy()
-        # rebuild the kept words exactly as the scoring-stage encode did
-        # (same tokenizer, same truncation bound) — cheaper than shipping
-        # array<string> through the fan-out
-        word_bound = max(0, (MAX_SEQ_LENGTH - 2) - 2)
-        words_cache: dict[int, list[str]] = {}
-        n = len(pdf)
-        max_l = max((len(s) for s in spliced_arr), default=0)
-        padded = np.zeros((n, max_l), dtype=np.uint64)
-        lengths = np.zeros(n, dtype=np.int64)
-        for i in range(n):
-            row = spliced_arr[i]
-            padded[i, : len(row)] = row
-            # W4 slice bound: keep positions 0..rel_pos-2 (rel_pos = true
-            # token count before the [relK][SEP] splice = len - 2)
-            lengths[i] = max(len(row) - 3, 0)
-        # U2+A7 batched across the Arrow batch (one matrix forward); padding
-        # tags are garbage but _decode_spans_batch masks beyond each row's
-        # W4 bound.
-        tags_mat = ner_fwd(padded, rel_arr)
-        rows, starts, ends, types = _decode_spans_batch(tags_mat, lengths)
-        subj_col = [[] for _ in range(n)]
-        obj_col = [[] for _ in range(n)]
-        for r, s, e, t in zip(rows, starts, ends, types):
-            words = words_cache.get(r)
-            if words is None:
-                if tok is not None:
-                    words = tok.encode(text_arr[r], MAX_SEQ_LENGTH - 2)[1]
-                else:
-                    words = tokenize_words(text_arr[r])[:word_bound]
-                words_cache[r] = words
-            (subj_col if t == _TAG_BSUB else obj_col)[r].append(span_text((s, e), words))
-        yield pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].to_numpy(),
-                "turn_idx": pdf["turn_idx"].to_numpy(),
-                "rel_id": rel_arr,
-                "subjects": subj_col,
-                "objects": obj_col,
-            }
-        )
-
-
 _TRIPLE_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType()),
@@ -293,23 +142,14 @@ def _fused_extract_fn(weights_bc=None, tokenizer_bc=None):
     fan-out (J1) -> splice (U4) -> NER forward -> slice/decode (W4/W3) ->
     cartesian assemble (J3), emitting final triple rows.
 
-    Why fuse (vs the staged plan kept in `extract_triples_staged`):
-    - one Python runner per task instead of two chained ones — local[K]
-      stops driving ~2K Python workers (the oversubscription documented in
-      scripts/scaling.py), and a real cluster halves its Python-worker
-      memory footprint;
-    - one Arrow round-trip instead of two — the staged path re-serializes
-      ids+text+probs out and spliced+text back in across the JVM boundary
-      for every fanned-out row;
-    - stage 2 reuses stage 1's in-memory ids/words — the staged decode
-      must RE-TOKENIZE every fanned-out row's text to rebuild span words.
-
-    Semantics are pinned bit-identical to the staged plan by
-    tests/test_parity.py (fused == staged == numpy oracle on the same
-    corpus) and by the driver's extract_diff_vs_golden row. The staged
-    stages remain the oracle-checked relational decomposition (P5/P6/J1/U4
-    each have standalone DuckDB-checked contract queries over the driver
-    tables, independent of this fusion).
+    Why one pass rather than a relational decomposition with a second
+    mapInPandas for the NER stage: one Python runner per task instead of
+    two chained ones (local[K] stops driving ~2K Python workers, the
+    oversubscription documented in scripts/scaling.py); one Arrow
+    round-trip instead of two (no ids+text+probs out and spliced+text back
+    in per fanned-out row); and stage 2 reuses stage 1's in-memory
+    ids/words instead of re-tokenizing. Measured 3x faster than the
+    two-pass form at sf0.1.
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -413,101 +253,13 @@ def _fused_extract_fn(weights_bc=None, tokenizer_bc=None):
     return gen
 
 
-def score_relations(
-    transcripts: DataFrame, weights_bc=None, tokenizer_bc=None
-) -> DataFrame:
-    """transcripts(conv_id, turn_idx, text, ...) -> + ids, words, probs."""
-    cols = [c for c in ("conv_id", "turn_idx", "text") if c in transcripts.columns]
-    return transcripts.select(*cols).mapInPandas(
-        _tokenize_and_score_fn(weights_bc, tokenizer_bc), schema=_SCORED_SCHEMA
-    )
-
-
-def select_relations(scored: DataFrame) -> DataFrame:
-    """P5 threshold + P6 first-argmax fallback + J1 fan-out, shuffle-free.
-
-    Reference: model.py:227-264. `array_position(probs, array_max(probs))`
-    returns the FIRST maximal index, matching torch.max tie-breaking.
-    """
-    pairs = (
-        f"filter(transform(probs, (p, i) -> named_struct('rel_id', i, 'prob', p)),"
-        f" x -> x.prob > {SIGMOID_THRESHOLD})"
-    )
-    fallback = (
-        "array(named_struct('rel_id', int(array_position(probs, array_max(probs)) - 1),"
-        " 'prob', array_max(probs)))"
-    )
-    return (
-        scored.withColumn("cand", F.expr(pairs))
-        .withColumn("sel", F.expr(f"CASE WHEN size(cand) > 0 THEN cand ELSE {fallback} END"))
-        .select("conv_id", "turn_idx", "ids", "text", F.explode("sel").alias("s"))
-        .select(
-            "conv_id",
-            "turn_idx",
-            "ids",
-            "text",
-            F.col("s.rel_id").alias("rel_id"),
-            F.col("s.prob").alias("prob"),
-        )
-    )
-
-
-def splice_marker(fanout: DataFrame) -> DataFrame:
-    """U4: append [relationK], [SEP] after the sentence (model.py:276-304).
-
-    With ragged (unpadded) sequences the reference's one-hot position
-    scatter at rel_pos/rel_pos+1 reduces to a concat — pure column ops.
-    """
-    return fanout.withColumn(
-        "spliced",
-        F.expr(f"concat(ids, array({REL_TOKEN_BASE} + rel_id, {SEP_ID}))"),
-    )
-
-
-def decode_spans(spliced: DataFrame, weights_bc=None, tokenizer_bc=None) -> DataFrame:
-    """U2+A7+W4+W3: spliced ids -> subject/object surface strings."""
-    return spliced.select("conv_id", "turn_idx", "rel_id", "text", "spliced").mapInPandas(
-        _ner_decode_fn(weights_bc, tokenizer_bc), schema=_DECODED_SCHEMA
-    )
-
-
-def assemble_triples(decoded: DataFrame) -> DataFrame:
-    """J3: subject x object cartesian per (turn, relation) (model.py:358-387).
-
-    Emits only when both sides are non-empty, like the reference's
-    `if h and t`. Duplicates preserved (dedup is a downstream stage).
-    """
-    pred_map = F.create_map(
-        *[x for i, p in enumerate(PREDICATES) for x in (F.lit(i), F.lit(p))]
-    )
-    return (
-        decoded.where((F.size("subjects") > 0) & (F.size("objects") > 0))
-        .select("conv_id", "turn_idx", "rel_id", F.explode("subjects").alias("subj"), "objects")
-        .select("conv_id", "turn_idx", "rel_id", "subj", F.explode("objects").alias("obj"))
-        .select(
-            "conv_id",
-            "turn_idx",
-            "subj",
-            "rel_id",
-            pred_map[F.col("rel_id")].alias("pred"),
-            "obj",
-        )
-    )
-
-
 def extract_triples(
-    transcripts: DataFrame, weights_bc=None, tokenizer_bc=None, fused: bool = True
+    transcripts: DataFrame, weights_bc=None, tokenizer_bc=None
 ) -> DataFrame:
     """Full pipeline: transcripts -> raw triple stream (with duplicates).
 
-    Narrow end-to-end and zero-shuffle either way; parallelism = input
-    partitions. ``fused=True`` (default, the production path) runs the
-    whole chain in ONE mapInPandas pass (see `_fused_extract_fn` for why:
-    one Python runner per task, one Arrow round-trip, tokenization reused
-    across stages); ``fused=False`` composes the staged relational plan
-    (scan -> mapInPandas -> project/explode -> mapInPandas -> explode x2)
-    whose intermediate stages are individually oracle-checked. The two
-    paths are pinned bit-identical by tests/test_parity.py.
+    Narrow end-to-end and zero-shuffle; parallelism = input partitions.
+    The whole chain runs in ONE mapInPandas pass (see `_fused_extract_fn`).
 
     `weights_bc`: optional ``sc.broadcast(MockWeights)`` — the broadcast
     model-weights seam (None uses the built-in defaults, identical output).
@@ -515,24 +267,12 @@ def extract_triples(
     exposes ``encode(text, max_length) -> (ids, words)`` — the tokenizer
     seam (None uses the built-in word-level tokenizer; a real deployment
     broadcasts its subword vocab here, reference data_module.py:25-35).
-    Both stages consume the SAME broadcast, so scoring-time truncation and
-    decode-time span rendering can never disagree.
+    Scoring-time truncation and decode-time span rendering share the one
+    encode call, so they can never disagree.
     """
-    if fused:
-        cols = [c for c in ("conv_id", "turn_idx", "text") if c in transcripts.columns]
-        return transcripts.select(*cols).mapInPandas(
-            _fused_extract_fn(weights_bc, tokenizer_bc), schema=_TRIPLE_SCHEMA
-        )
-    return assemble_triples(
-        decode_spans(
-            splice_marker(
-                select_relations(
-                    score_relations(transcripts, weights_bc, tokenizer_bc)
-                )
-            ),
-            weights_bc,
-            tokenizer_bc,
-        )
+    cols = [c for c in ("conv_id", "turn_idx", "text") if c in transcripts.columns]
+    return transcripts.select(*cols).mapInPandas(
+        _fused_extract_fn(weights_bc, tokenizer_bc), schema=_TRIPLE_SCHEMA
     )
 
 

@@ -285,10 +285,11 @@ def build_gold_ner_features(corpus: DataFrame, tokenizer_bc=None) -> DataFrame:
     stage like the reference's (data_module.py:25-35). Sentence ids come
     from the tokenizer's encode (specials re-stamped around them); marker
     and special ids stay config-assigned ([relationK] analogues at
-    REL_TOKEN_BASE + k, matching extract.splice_marker), since the seam
-    contract doesn't expose added-token ids. Injecting WordTokenizer is
-    bit-identical to the default column path (pinned by test); `toks` is
-    ignored on this path (those tokens came from the word-level regex).
+    REL_TOKEN_BASE + k, matching the U4 splice in extract._fused_extract_fn),
+    since the seam contract doesn't expose added-token ids. Injecting
+    WordTokenizer is bit-identical to the default column path (pinned by
+    test); `toks` is ignored on this path (those tokens came from the
+    word-level regex).
     """
     base = corpus.where(F.size("gold") > 0)
     if tokenizer_bc is not None:
@@ -357,7 +358,7 @@ def _gold_ner_features_seam(base: DataFrame, tokenizer_bc) -> DataFrame:
     most MAX_SEQ_LENGTH - 4 sentence tokens — the column path's MAX_WORDS.
     input_ids ride through as the tokenizer-aligned hay_ids instead of the
     crc32 transform; marker ids use the same map + hash-extension rule as
-    the column path (and extract.splice_marker)."""
+    the column path (and the U4 splice in extract._fused_extract_fn)."""
     tokenized = _tokenized_gold_arrow(base, tokenizer_bc, MAX_SEQ_LENGTH - 2)
     fanned = tokenized.select(
         "text_id",

@@ -5,12 +5,12 @@ linking. This stage is Spark-native by design:
 
 1. mention table: distinct subject/object surface forms with stable 64-bit ids
 2. candidate blocking over character-3-gram shingles — avoids the O(n^2)
-   all-pairs comparison. Two interchangeable blockers: `banded` (default) is
-   pure column-expression MinHash banding; `ml` is HashingTF ->
-   MinHashLSH.approxSimilarityJoin with a fixed seed (pyspark.ml public API)
+   all-pairs comparison: pure column-expression MinHash banding over the
+   band hashes stored in a `mention_state` table
 3. rerank: cosine similarity on pooled mention embeddings (mock pooled [CLS]
-   vector = char-trigram hashing vector, openue_spark.mock_models) via a
-   vectorized pandas UDF
+   vector = char-trigram hashing vector, openue_spark.mock_models, built in
+   an Arrow-batched mapInPandas) as a built-in array dot product, ahead of
+   the exact-Jaccard verify
 4. connected components: iterative min-label propagation over the surviving
    edges (join-based union-find) with bounded iterations and per-round
    localCheckpoint to cut lineage — the scale-safe fixpoint loop
@@ -102,52 +102,11 @@ def embed_mentions(mentions: DataFrame) -> DataFrame:
     )
 
 
-def candidate_pairs(
-    mentions: DataFrame,
-    jaccard_distance: float = 0.6,
-    num_hash_tables: int = 5,
-    num_features: int = 1 << 18,
-) -> DataFrame:
-    """MinHash-LSH blocking over char-3-gram shingle sets.
-
-    Returns candidate (a_id, b_id, jaccard_dist) with a_id < b_id.
-    Shingling is pure column ops; only the LSH itself uses pyspark.ml.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    shingled = mentions.withColumn(
-        "shingles",
-        F.array_distinct(
-            F.expr(
-                "transform(sequence(1, greatest(1, length(mention) - 2)),"
-                " i -> substring(mention, i, 3))"
-            )
-        ),
-    )
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=num_features, binary=True
-    )
-    feats = tf.transform(shingled)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
-    )
-    model = lsh.fit(feats)
-    joined = model.approxSimilarityJoin(feats, feats, jaccard_distance, distCol="jaccard_dist")
-    return (
-        joined.where(F.col("datasetA.mention_id") < F.col("datasetB.mention_id"))
-        .select(
-            F.col("datasetA.mention_id").alias("a_id"),
-            F.col("datasetB.mention_id").alias("b_id"),
-            "jaccard_dist",
-        )
-    )
-
-
 def _shingled_mentions(mentions: DataFrame) -> DataFrame:
     """(mention_id, shingles): distinct char-3-gram set per mention —
-    the ONE definition of the blocking feature space, shared by the
-    verify-first blocker and the fused candidate_edges path so the hashing
-    scheme can never desynchronize between them.
+    the ONE definition of the portable-mode blocking feature space, shared
+    by candidate_pairs_banded, mention_state and the incremental fold so
+    the hashing scheme can never desynchronize between them.
 
     Lazily checkpointed: the shingle arrays feed minhash signatures AND the
     verify join's payload; without the barrier Catalyst inlines the
@@ -339,14 +298,11 @@ def candidate_pairs_banded(
     corpus (measured 2x slower end-to-end). The exact-Jaccard verify keeps
     LSH false positives out of the edge set either way.
 
-    Vs pyspark.ml MinHashLSH.approxSimilarityJoin: no ML pipeline fit, no
-    sparse-vector conversion, no key-distance UDF — just narrow array exprs
-    (whole-stage codegen) + one self-join on uniform band hashes (no skew by
-    construction) + an exact-Jaccard verify that keeps false positives out.
-    Same canonical groups as the ml blocker on the test corpora, measured
-    ~13% faster end-to-end at sandbox scale, and the plan is fully
-    Catalyst-visible/AQE-tunable. Returns (a_id, b_id, jaccard_dist) like
-    `candidate_pairs`.
+    No ML pipeline fit, no sparse-vector conversion, no key-distance UDF —
+    just narrow array exprs (whole-stage codegen) + one self-join on
+    uniform band hashes (no skew by construction) + an exact-Jaccard verify
+    that keeps false positives out; the plan is fully
+    Catalyst-visible/AQE-tunable. Returns (a_id, b_id, jaccard_dist).
 
     `portable=True` switches the signature family to the md5-over-string
     scheme the DuckDB link oracles replay (the hash-checked contract rows
@@ -387,7 +343,7 @@ def _jaccard_verify(
     broadcast_sides: bool = False,
 ) -> DataFrame:
     """Exact-Jaccard verify of an (a_id, b_id) candidate stream — the one
-    shared tail of every blocker (banded, fused, incremental), so the
+    shared tail of every blocker (banded, state-fed, incremental), so the
     arithmetic the DuckDB link oracles mirror can never fork. `hashed` is
     a (mention_id, sh, n_sh) table (from _hashed_shingles or the stored
     mention_state).
@@ -402,7 +358,7 @@ def _jaccard_verify(
     - |∪| computed as n_a + n_b - |∩| (shingle sets are distinct)
     - broadcast_sides=True ships the per-mention tables explicitly
       broadcast so the candidate stream itself is never shuffled (the
-      fused path's choice; the verify-first path lets AQE decide)
+      state-fed path's choice; the verify-first path lets AQE decide)
 
     Keeps every input column of `cand`, adds `jaccard_dist`; duplicate
     candidate pairs ride through (dedup AFTER verify — the round-1 lesson).
@@ -556,53 +512,6 @@ def _chunk_hot_buckets(banded: DataFrame, max_bucket: int) -> DataFrame:
     )
 
 
-def candidate_edges(
-    mentions: DataFrame,
-    embedded: DataFrame,
-    jaccard_distance: float = 0.6,
-    min_cosine: float = 0.85,
-    n_hashes: int = 16,
-    n_bands: int = 8,
-    max_bucket: int | None = 256,
-    n_mentions: int | None = None,
-) -> DataFrame:
-    """Fused blocking -> hot-bucket cap -> cosine prefilter -> exact-Jaccard
-    verify.
-
-    The edge set is a CONJUNCTION (jaccard_dist <= t AND cosine >= c), so
-    filter order is free — and the order matters enormously at scale:
-    array_intersect over ~38-element shingle sets costs ~10x a 32-dim dot
-    product, and the cosine cut (8.7x selective on the 200k-turn profile)
-    runs first so the expensive verify only sees survivors. Per-pair inputs
-    (embedding, hashed shingles, set size) join from explicitly-broadcast
-    mention-side tables (62k rows), so the candidate stream is never
-    shuffled; pair dedup runs LAST on the ~1M survivors (the round-1
-    lesson, applied to both expensive filters).
-    `candidate_pairs_banded` keeps the verify-first shape for the
-    oracle-checked contract queries (max_bucket=None there: the mirror
-    must be exact and fixture buckets are tiny).
-
-    `n_mentions` gates the broadcast hints (see BROADCAST_MAX_MENTIONS);
-    callers that already know the count (link_entities does) pass it to
-    skip the extra count job here.
-    """
-    if n_mentions is None:
-        n_mentions = mentions.count()
-    # de-stringed production feature source (see _shingle_hashed_mentions):
-    # int64 shingle hashes feed both the xxhash64 band signatures and the
-    # verify intersects — no shingle strings, no md5 hex sigs
-    shingled = _shingle_hashed_mentions(mentions)
-    return _fused_edges(
-        _banded_signatures(shingled, n_hashes, n_bands),
-        shingled.select("mention_id", "sh", F.size("sh").alias("n_sh")),
-        embedded,
-        jaccard_distance,
-        min_cosine,
-        max_bucket,
-        broadcast_sides=n_mentions <= BROADCAST_MAX_MENTIONS,
-    )
-
-
 def candidate_edges_from_state(
     state: DataFrame,
     jaccard_distance: float = 0.6,
@@ -610,45 +519,35 @@ def candidate_edges_from_state(
     max_bucket: int | None = 256,
     n_mentions: int | None = None,
 ) -> DataFrame:
-    """candidate_edges fed from a persisted mention_state table — identical
-    edges (pinned by test), zero per-mention feature recompute.
+    """Blocking -> hot-bucket cap -> cosine prefilter -> exact-Jaccard
+    verify, fed from a persisted mention_state table (zero per-mention
+    feature recompute).
+
+    The edge set is a CONJUNCTION (jaccard_dist <= t AND cosine >= c), so
+    filter order is free — and the order matters enormously at scale:
+    array_intersect over ~38-element shingle sets costs ~10x a 32-dim dot
+    product, and the cosine cut (8.7x selective on the 200k-turn profile)
+    runs first so the expensive verify only sees survivors. Per-pair inputs
+    (embedding, hashed shingles, set size) join from explicitly-broadcast
+    mention-side tables, so the candidate stream is never shuffled; pair
+    dedup runs LAST on the survivors (the round-1 lesson, applied to both
+    expensive filters). `candidate_pairs_banded` keeps the verify-first
+    shape for the oracle-checked contract queries.
+
     `n_mentions` gates the broadcast hints (BROADCAST_MAX_MENTIONS);
     counted from `state` when not supplied (parquet-footer-cheap)."""
     if n_mentions is None:
         n_mentions = state.count()
-    return _fused_edges(
-        state.select(
-            "mention_id",
-            "mention",
-            F.posexplode("band_hashes").alias("band_id", "band_hash"),
-        ),
-        state.select("mention_id", "sh", "n_sh"),
-        state.select("mention_id", "embedding"),
-        jaccard_distance,
-        min_cosine,
-        max_bucket,
-        broadcast_sides=n_mentions <= BROADCAST_MAX_MENTIONS,
+    broadcast_sides = n_mentions <= BROADCAST_MAX_MENTIONS
+    banded = state.select(
+        "mention_id",
+        "mention",
+        F.posexplode("band_hashes").alias("band_id", "band_hash"),
     )
-
-
-def _fused_edges(
-    banded_src: DataFrame,
-    hashed: DataFrame,
-    embedded: DataFrame,
-    jaccard_distance: float,
-    min_cosine: float,
-    max_bucket: int | None,
-    broadcast_sides: bool = True,
-) -> DataFrame:
-    """Shared fused-path core over any feature source (recomputed or
-    stored): chunk hot buckets -> self-join -> cosine -> Jaccard -> dedup.
-    `broadcast_sides` gates the per-mention-side broadcast hints — False
-    above BROADCAST_MAX_MENTIONS, where AQE must pick the join strategy."""
-    if max_bucket is None:
-        banded, keys = banded_src, ["band_id", "band_hash"]
-    else:
-        banded = _chunk_hot_buckets(banded_src, max_bucket)
-        keys = ["band_id", "band_hash", "chunk"]
+    keys = ["band_id", "band_hash"]
+    if max_bucket is not None:
+        banded = _chunk_hot_buckets(banded, max_bucket)
+        keys.append("chunk")
         # The verify stage is COMPUTE-dense, not byte-dense: ~30 bytes/row
         # of band keys in, then pair fan-out + cosine + array_intersect
         # per candidate (measured 628 core-s of HOF work from a 77 MB
@@ -673,35 +572,21 @@ def _fused_edges(
     # stage 1: cosine prefilter; stage 2: exact-Jaccard verify on the
     # survivors only (shared helpers — see their docstrings for the
     # broadcast/shuffle rationale)
-    close = _cosine_filter(cand, embedded, min_cosine, broadcast_sides=broadcast_sides)
+    close = _cosine_filter(
+        cand,
+        state.select("mention_id", "embedding"),
+        min_cosine,
+        broadcast_sides=broadcast_sides,
+    )
     return (
-        _jaccard_verify(close, hashed, jaccard_distance, broadcast_sides=broadcast_sides)
+        _jaccard_verify(
+            close,
+            state.select("mention_id", "sh", "n_sh"),
+            jaccard_distance,
+            broadcast_sides=broadcast_sides,
+        )
         .select("a_id", "b_id", "jaccard_dist", "cosine")
         .dropDuplicates(["a_id", "b_id"])
-    )
-
-
-def rerank_cosine(
-    pairs: DataFrame, embedded: DataFrame, min_cosine: float = 0.85
-) -> DataFrame:
-    """Keep candidate pairs whose pooled-embedding cosine >= min_cosine.
-
-    Embeddings are L2-normalized at creation, so cosine = dot product —
-    computed with built-in array expressions (JVM-side), no UDF.
-    """
-    ea = embedded.select(
-        F.col("mention_id").alias("a_id"), F.col("embedding").alias("emb_a")
-    )
-    eb = embedded.select(
-        F.col("mention_id").alias("b_id"), F.col("embedding").alias("emb_b")
-    )
-    dot = F.expr("aggregate(zip_with(emb_a, emb_b, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
-    return (
-        pairs.join(ea, "a_id")
-        .join(eb, "b_id")
-        .withColumn("cosine", dot)
-        .where(F.col("cosine") >= min_cosine)
-        .select("a_id", "b_id", "jaccard_dist", "cosine")
     )
 
 
@@ -1034,64 +919,43 @@ def link_entities(
     triples: DataFrame,
     jaccard_distance: float = 0.6,
     min_cosine: float = 0.85,
-    blocker: str = "banded",
     max_bucket: int | None = 256,
     state: DataFrame | None = None,
 ) -> DataFrame:
     """Full linking stage: triples -> canonical mention mapping.
 
-    The mention table is persisted for its three consumers (LSH fit,
-    component init, canonicalize) and the returned mapping is eagerly
-    localCheckpointed: downstream `canonical_triples` joins it twice, and
-    without materialization each join would re-pull the whole LSH + CC
-    lineage (measured 4x wall-clock on the end-to-end job).
+    Blocking always reads a mention_state table. `state` is an optional
+    one covering exactly this corpus's mentions (the job builds it once
+    and also persists it for --increment runs); without it the state is
+    built here from `mention_table(triples)` and eagerly checkpointed,
+    the same barrier the job puts on its stored state.
 
-    `state` is an optional mention_state table covering exactly this
-    corpus's mentions (the builder that also persists it for --increment
-    runs): blocking reads its features instead of recomputing shingles,
-    signatures, and embeddings — identical edges, one feature pass per
-    corpus instead of two.
+    The mention set is persisted for its consumers (component init,
+    canonicalize) and the returned mapping is eagerly localCheckpointed:
+    downstream `canonical_triples` joins it twice, and without
+    materialization each join would re-pull the whole blocking + CC
+    lineage (measured 4x wall-clock on the end-to-end job).
     """
-    if state is not None and blocker == "banded":
-        # the state table IS the distinct mention set (one row per
-        # mention_id, carrying the surface form): deriving `mentions` from
-        # it skips re-scanning the full triple table through
-        # mention_table's explode + distinct shuffle — at 12M turns that
-        # scan costs a full extra pass over ~33M mention instances for
-        # rows the caller already materialized
-        mentions = state.select("mention_id", "mention").persist()
-    else:
-        mentions = mention_table(triples).persist()
-    # one count: warms the persist for the three downstream consumers AND
-    # gates the fused verify's broadcast hints (BROADCAST_MAX_MENTIONS —
-    # at 10^8-10^9 mentions the hinted side stops fitting executor memory
-    # and AQE must pick the join from runtime sizes instead)
+    if state is None:
+        state = mention_state(mention_table(triples)).localCheckpoint(eager=True)
+    # the state table IS the distinct mention set (one row per mention_id,
+    # carrying the surface form): deriving `mentions` from it skips
+    # re-scanning the full triple table through mention_table's explode +
+    # distinct shuffle — at 12M turns that scan costs a full extra pass
+    # over ~33M mention instances for rows the caller already materialized
+    mentions = state.select("mention_id", "mention").persist()
+    # one count: warms the persist for the downstream consumers AND gates
+    # the verify's broadcast hints (BROADCAST_MAX_MENTIONS — at
+    # 10^8-10^9 mentions the hinted side stops fitting executor memory and
+    # AQE must pick the join from runtime sizes instead)
     n_mentions = mentions.count()
-    if state is not None and blocker == "banded":
-        embedded = None
-        edges = candidate_edges_from_state(
-            state,
-            jaccard_distance,
-            min_cosine,
-            max_bucket=max_bucket,
-            n_mentions=n_mentions,
-        )
-    elif blocker == "banded":
-        embedded = embed_mentions(mentions).persist()
-        # fused path: cosine prefilter BEFORE the exact-Jaccard verify
-        # (same conjunction, ~5x less verify work — see candidate_edges)
-        edges = candidate_edges(
-            mentions,
-            embedded,
-            jaccard_distance,
-            min_cosine,
-            max_bucket=max_bucket,
-            n_mentions=n_mentions,
-        )
-    else:
-        embedded = embed_mentions(mentions).persist()
-        pairs = candidate_pairs(mentions, jaccard_distance)
-        edges = rerank_cosine(pairs, embedded, min_cosine)
+    edges = candidate_edges_from_state(
+        state,
+        jaccard_distance,
+        min_cosine,
+        max_bucket=max_bucket,
+        n_mentions=n_mentions,
+    )
     # cap 50, not 15: the loop exits at the first converged round, so the
     # higher bound is free on shallow clusters and covers deep chains a
     # 15-round cap would silently leave with split labels (a warning fires
@@ -1135,8 +999,6 @@ def link_entities(
             RuntimeWarning,
             stacklevel=2,
         )
-    if embedded is not None:
-        embedded.unpersist()
     mentions.unpersist()
     return mapping
 

@@ -109,15 +109,15 @@ def shard_of(conv_col, n_shards: int):
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The run manifest; empty on a first run (no manifest directory). A
+    manifest that exists but cannot be read raises — treating it as "no
+    shards done" would silently recompute and append a second lineage."""
     import os
 
     path = f"{out_dir}/manifest"
     if not os.path.isdir(path):  # local FS probe avoids noisy first-run read
         return spark.createDataFrame([], MANIFEST_SCHEMA)
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def completed_shards(

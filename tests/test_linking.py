@@ -1,17 +1,16 @@
 """Entity linking / canonicalization stage tests (SURVEY.md §2.10)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from openue_spark.pipeline.linking import (
-    candidate_pairs,
     canonical_triples,
     canonicalize,
     connected_components,
     embed_mentions,
     link_entities,
     mention_table,
-    rerank_cosine,
 )
 
 
@@ -53,18 +52,6 @@ def test_embeddings_normalized(spark, triples_df):
     assert all(abs(r.n2 - 1.0) < 1e-9 for r in norms)
 
 
-def test_lsh_blocks_near_duplicates(spark, triples_df):
-    mentions = mention_table(triples_df)
-    pairs = candidate_pairs(mentions, jaccard_distance=0.6)
-    by_name = {r.mention: r.mention_id for r in mentions.collect()}
-    got = {(min(r.a_id, r.b_id), max(r.a_id, r.b_id)) for r in pairs.collect()}
-    a, b = by_name["acme corp"], by_name["acme corp."]
-    assert (min(a, b), max(a, b)) in got
-    # unrelated strings must not pair with acme
-    z = by_name["zebra industries"]
-    assert not any(z in p and (a in p or b in p) for p in got)
-
-
 def test_connected_components_transitive(spark):
     mentions = spark.createDataFrame(
         [(i, f"m{i}") for i in range(6)], "mention_id long, mention string"
@@ -95,20 +82,9 @@ def test_end_to_end_linking_and_rewrite(spark, triples_df):
     assert rewritten.count() == triples_df.count()
 
 
-def test_rerank_filters_low_cosine(spark, triples_df):
-    mentions = mention_table(triples_df)
-    embedded = embed_mentions(mentions)
-    pairs = candidate_pairs(mentions, jaccard_distance=0.95)  # very permissive
-    kept = rerank_cosine(pairs, embedded, min_cosine=0.99).collect()
-    # at 0.99 only truly-identical-shingle pairs could survive; acme corp vs
-    # acme corporation share most trigrams but differ -> below 0.99
-    for r in kept:
-        assert r.cosine >= 0.99
-
-
 def test_banded_blocking_matches_ml_lsh_on_clusters(spark, triples_df):
-    """Both blockers must surface the acme-variant near-dup pairs; the
-    banded path additionally guarantees exact-Jaccard-verified candidates."""
+    """The banded blocker surfaces the acme-variant near-dup pairs and no
+    pair across unrelated surface forms (exact-Jaccard-verified)."""
     from openue_spark.pipeline.linking import candidate_pairs_banded
 
     mentions = mention_table(triples_df)
@@ -123,17 +99,6 @@ def test_banded_blocking_matches_ml_lsh_on_clusters(spark, triples_df):
     far = (min(by_name["paris"], by_name["zebra industries"]),
            max(by_name["paris"], by_name["zebra industries"]))
     assert far not in got
-
-
-def test_link_entities_banded_and_ml_agree_on_canonical_groups(spark, triples_df):
-    groups = {}
-    for blocker in ("banded", "ml"):
-        mapping = link_entities(triples_df, blocker=blocker)
-        groups[blocker] = {
-            r.mention: r.canonical for r in mapping.collect()
-        }
-    assert groups["banded"] == groups["ml"]
-    assert groups["banded"]["acme corp."] == groups["banded"]["acme corp"]
 
 
 def test_connected_components_strict_raises_on_deep_chain(spark):
@@ -163,48 +128,61 @@ def test_connected_components_strict_raises_on_deep_chain(spark):
     assert labels.where(F.col("label") != "m00").count() == 0
 
 
+def _numpy_cosine_cut(pairs, embedded, min_cosine):
+    """Reference cosine cut over collected rows: {(a_id, b_id):
+    (jaccard_dist, cosine)} for the verified `pairs` whose embedding dot
+    product (a sequential numpy cumsum, the same left-to-right order as
+    the Spark fold) is >= min_cosine."""
+    vec = {r.mention_id: np.asarray(r.embedding) for r in embedded.collect()}
+    out = {}
+    for r in pairs.collect():
+        cos = float(np.cumsum(vec[r.a_id] * vec[r.b_id])[-1])
+        if cos >= min_cosine:
+            out[(r.a_id, r.b_id)] = (r.jaccard_dist, cos)
+    return out
+
+
 def test_candidate_edges_hot_bucket_cap(spark):
-    """candidate_edges == (blocking -> verify -> rerank) conjunction on a
-    small corpus, and the hot-bucket cap bounds candidate volume: with a
-    cap below a degenerate bucket's size its pairs are dropped, while
-    small-bucket corpora are unaffected by the default cap."""
+    """candidate_edges_from_state == (blocking -> verify -> cosine cut)
+    conjunction on a small corpus, with the cut computed in numpy,
+    and the hot-bucket cap bounds candidate volume: with a cap below a
+    degenerate bucket's size its pairs are dropped, while small-bucket
+    corpora are unaffected by the default cap."""
     from pyspark.sql import functions as F
 
     from openue_spark.pipeline.linking import (
-        candidate_edges,
+        candidate_edges_from_state,
         candidate_pairs_banded,
-        embed_mentions,
-        rerank_cosine,
+        mention_state,
     )
 
     rows = [(f"ent{i:03d} corp", ) for i in range(20)] + [("unrelated zebra",)]
     mentions = spark.createDataFrame(rows, "mention string").withColumn(
         "mention_id", F.xxhash64("mention")
     ).persist()
-    emb = embed_mentions(mentions).persist()
+    state = mention_state(mentions).persist()
 
     fused = {
         (r.a_id, r.b_id)
-        for r in candidate_edges(mentions, emb, 0.6, 0.85, max_bucket=None).collect()
+        for r in candidate_edges_from_state(state, 0.6, 0.85, max_bucket=None).collect()
     }
-    classic = {
-        (r.a_id, r.b_id)
-        for r in rerank_cosine(
-            candidate_pairs_banded(mentions, 0.6), emb, 0.85
-        ).collect()
-    }
+    classic = set(
+        _numpy_cosine_cut(
+            candidate_pairs_banded(mentions, 0.6), embed_mentions(mentions), 0.85
+        )
+    )
     assert fused == classic and len(fused) > 0  # reordered conjunction, same set
 
     # default cap leaves this small corpus untouched; a tiny cap drops the
     # shared-vocabulary bucket's pairs entirely
     dflt = {
         (r.a_id, r.b_id)
-        for r in candidate_edges(mentions, emb, 0.6, 0.85).collect()
+        for r in candidate_edges_from_state(state, 0.6, 0.85).collect()
     }
     assert dflt == fused
     capped = {
         (r.a_id, r.b_id)
-        for r in candidate_edges(mentions, emb, 0.6, 0.85, max_bucket=2).collect()
+        for r in candidate_edges_from_state(state, 0.6, 0.85, max_bucket=2).collect()
     }
     assert len(capped) < len(fused)  # chunking bounds candidate volume...
     assert capped <= fused  # ...and capped edges stay a subset of uncapped
@@ -219,9 +197,9 @@ def test_chunked_cap_keeps_dense_cluster_connected(spark):
     from pyspark.sql import functions as F
 
     from openue_spark.pipeline.linking import (
-        candidate_edges,
+        candidate_edges_from_state,
         connected_components,
-        embed_mentions,
+        mention_state,
     )
 
     # 30 near-identical surface forms: pairwise char-3-gram Jaccard is high,
@@ -230,9 +208,9 @@ def test_chunked_cap_keeps_dense_cluster_connected(spark):
     mentions = spark.createDataFrame(rows, "mention string").withColumn(
         "mention_id", F.xxhash64("mention")
     ).persist()
-    emb = embed_mentions(mentions).persist()
-    capped = candidate_edges(mentions, emb, 0.6, 0.85, max_bucket=2).persist()
-    full = candidate_edges(mentions, emb, 0.6, 0.85, max_bucket=None).persist()
+    state = mention_state(mentions).persist()
+    capped = candidate_edges_from_state(state, 0.6, 0.85, max_bucket=2).persist()
+    full = candidate_edges_from_state(state, 0.6, 0.85, max_bucket=None).persist()
     n_capped, n_full = capped.count(), full.count()
     assert 0 < n_capped < n_full  # volume genuinely bounded
     labels = connected_components(mentions, capped)
@@ -640,12 +618,13 @@ def test_pairwise_clustering_prf_hand_case(spark):
 
 
 def test_state_fed_blocker_and_link_match_recompute(spark, triples_df):
-    """candidate_edges_from_state and link_entities(state=...) must produce
-    the same edges/mapping as the recompute path — the one-feature-pass
-    full build depends on it."""
+    """candidate_edges_from_state must produce the verified, cosine-cut
+    edges of the verify-first blocker (cut recomputed in numpy), and
+    link_entities(state=...) the same mapping as link_entities building
+    its own state — the one-feature-pass full build depends on it."""
     from openue_spark.pipeline.linking import (
-        candidate_edges,
         candidate_edges_from_state,
+        candidate_pairs_banded,
         link_entities,
         mention_state,
         mention_table,
@@ -654,10 +633,10 @@ def test_state_fed_blocker_and_link_match_recompute(spark, triples_df):
     mentions = mention_table(triples_df).persist()
     state = mention_state(mentions).localCheckpoint(eager=True)
     recomputed = {
-        (r.a_id, r.b_id, round(r.jaccard_dist, 9), round(r.cosine, 9))
-        for r in candidate_edges(
-            mentions, embed_mentions(mentions), 0.6, 0.5, max_bucket=None
-        ).collect()
+        (a, b, round(jd, 9), round(cos, 9))
+        for (a, b), (jd, cos) in _numpy_cosine_cut(
+            candidate_pairs_banded(mentions, 0.6), embed_mentions(mentions), 0.5
+        ).items()
     }
     from_state = {
         (r.a_id, r.b_id, round(r.jaccard_dist, 9), round(r.cosine, 9))

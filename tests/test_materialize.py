@@ -1,5 +1,6 @@
 """Materialization: salted dedup, manifest lineage, checkpoint-resume."""
 
+import os
 import shutil
 import tempfile
 from collections import Counter
@@ -35,6 +36,22 @@ def test_salted_dedup_matches_plain(spark, transcripts):
         .collect()
     }
     assert salted == plain
+
+
+def test_corrupt_manifest_raises_instead_of_fresh_run(spark):
+    """A manifest directory that exists but does not read as parquet must
+    fail the resume probe, not pass for "no shards done"."""
+    from openue_spark.pipeline.materialize import completed_shards
+
+    tmp = tempfile.mkdtemp(prefix="openue_manifest_")
+    try:
+        os.makedirs(f"{tmp}/manifest")
+        with open(f"{tmp}/manifest/part-00000.parquet", "w") as fh:
+            fh.write("not a parquet file\n")
+        with pytest.raises(Exception, match="(?i)parquet"):
+            completed_shards(spark, tmp, "extract")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_resumable_run_survives_crash(spark, transcripts):

@@ -5,11 +5,13 @@ any broadcast object with seq_probs_batch/ner_tags_batch methods IS the
 model. These tests prove the seam carries real weight bundles:
 
 - NumpyBagModel (torch-free exported-weights scorer) drives the FULL
-  fused and staged Spark extraction in every environment.
+  Spark extraction in every environment, and its output matches the
+  numpy reference oracle (`oracle.extract_corpus(..., model=...)`) run
+  under the same model.
 - HFTransformerWeights (real HuggingFace BERT pair, random tiny weights —
   no download) does the same wherever torch+transformers are importable;
-  importorskip-gated otherwise (this sandbox ships neither). This is the
-  U1/U2 analogue of the multimodal seam's real-PPM-codec proof.
+  importorskip-gated otherwise. This is the U1/U2 analogue of the
+  multimodal seam's real-PPM-codec proof.
 """
 
 import os
@@ -20,7 +22,11 @@ import pytest
 
 
 def _key(r):
-    return (r.conv_id, r.turn_idx, r.rel_id, r.subj, r.pred, r.obj)
+    return (r.conv_id, int(r.turn_idx), int(r.rel_id), r.subj, r.pred, r.obj)
+
+
+def _oracle_rows(pdf):
+    return list(zip(pdf["conv_id"], pdf["turn_idx"].astype(int), pdf["text"]))
 
 
 def _vocab_path():
@@ -49,30 +55,32 @@ def test_numpy_bag_model_pickles_and_scores_deterministically():
     assert t_other.shape == t1.shape
 
 
-def test_numpy_bag_model_drives_extraction_fused_equals_staged(spark):
-    from openue_spark.fixtures import transcripts_spark
+def test_numpy_bag_model_drives_extraction_matches_oracle(spark):
+    from openue_spark.fixtures import transcripts_pandas
     from openue_spark.hf_models import NumpyBagModel
+    from openue_spark.oracle import extract_corpus
     from openue_spark.pipeline.extract import extract_triples
 
-    turns = transcripts_spark(spark, 300)
-    model_bc = spark.sparkContext.broadcast(NumpyBagModel.tiny_random(7))
-    fused = sorted(map(_key, extract_triples(turns, weights_bc=model_bc).collect()))
-    staged = sorted(
-        map(_key, extract_triples(turns, weights_bc=model_bc, fused=False).collect())
-    )
-    assert fused == staged
-    assert len(fused) > 0
+    pdf = transcripts_pandas(300)
+    turns = spark.createDataFrame(pdf)
+    model = NumpyBagModel.tiny_random(7)
+    model_bc = spark.sparkContext.broadcast(model)
+    got = sorted(map(_key, extract_triples(turns, weights_bc=model_bc).collect()))
+    want = sorted(map(_key, extract_corpus(_oracle_rows(pdf), model=model)))
+    assert got == want
+    assert len(got) > 0
     # the custom forward actually decided the output: default mock weights
     # extract a different triple set from the same corpus
     default = sorted(map(_key, extract_triples(turns).collect()))
-    assert fused != default
+    assert got != default
 
 
 def test_hf_transformer_rides_the_weights_and_tokenizer_seams(spark):
     torch = pytest.importorskip("torch")
     pytest.importorskip("transformers")
-    from openue_spark.fixtures import transcripts_spark
+    from openue_spark.fixtures import transcripts_pandas
     from openue_spark.hf_models import HFTransformerWeights, _fold_ids
+    from openue_spark.oracle import extract_corpus
     from openue_spark.pipeline.extract import extract_triples
     from openue_spark.tokenizer import VocabWordPieceTokenizer
 
@@ -94,13 +102,13 @@ def test_hf_transformer_rides_the_weights_and_tokenizer_seams(spark):
     assert np.array_equal(bundle.ner_tags_batch(padded, np.array([0, 1])), want_tags)
 
     # a REAL transformer + a REAL WordPiece vocab through both broadcast
-    # seams, full fused-vs-staged Spark extraction
+    # seams, Spark extraction vs the reference oracle under the same pair
+    tokenizer = VocabWordPieceTokenizer.from_file(_vocab_path())
     weights_bc = spark.sparkContext.broadcast(bundle)
-    tokenizer_bc = spark.sparkContext.broadcast(
-        VocabWordPieceTokenizer.from_file(_vocab_path())
-    )
-    turns = transcripts_spark(spark, 120)
-    fused = sorted(
+    tokenizer_bc = spark.sparkContext.broadcast(tokenizer)
+    pdf = transcripts_pandas(120)
+    turns = spark.createDataFrame(pdf)
+    got = sorted(
         map(
             _key,
             extract_triples(
@@ -108,15 +116,12 @@ def test_hf_transformer_rides_the_weights_and_tokenizer_seams(spark):
             ).collect(),
         )
     )
-    staged = sorted(
+    want = sorted(
         map(
             _key,
-            extract_triples(
-                turns,
-                weights_bc=weights_bc,
-                tokenizer_bc=tokenizer_bc,
-                fused=False,
-            ).collect(),
+            extract_corpus(
+                _oracle_rows(pdf), encode_fn=tokenizer.encode, model=bundle
+            ),
         )
     )
-    assert fused == staged
+    assert got == want

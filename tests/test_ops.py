@@ -186,8 +186,9 @@ def test_simhash_kernel_bit_equals_expression_form(spark):
     """Round-6 invariant: the Arrow-batched numpy fingerprint pass
     (with_simhash) is BIT-IDENTICAL to the pure-SQL reference form the
     DuckDB oracle mirrors (with_simhash_expr) — including unicode tokens,
-    empty-string tokens, and a doc with an empty token array (the numpy
-    reduceat fallback branch)."""
+    empty-string tokens, a doc with an empty token array (left out of the
+    numpy reduceat offsets), a NULL token array and a NULL token (both 0
+    in the SQL form)."""
     from openue_spark.ops.dedup import with_simhash, with_simhash_expr
 
     rng = np.random.RandomState(7)
@@ -195,7 +196,7 @@ def test_simhash_kernel_bit_equals_expression_form(spark):
     rows = [
         (i, list(rng.choice(vocab, size=rng.randint(1, 30))))
         for i in range(60)
-    ] + [(1000, [""]), (1001, [])]
+    ] + [(1000, [""]), (1001, []), (1002, None), (1003, ["t1", None])]
     df = spark.createDataFrame(rows, "doc_id long, tokens array<string>")
     got = {r.doc_id: r.simhash for r in with_simhash(df).collect()}
     want = {
@@ -292,6 +293,28 @@ def test_embedding_near_dup_symmetric_threshold(spark, emb):
     pairs = embedding_near_dup_pairs(emb, min_cosine=0.5).collect()
     for r in pairs:
         assert r.a_id < r.b_id and r.cosine_r >= 0.5
+
+
+def test_embedding_near_dup_pairs_accepts_string_ids(spark, emb):
+    """Blocks are assigned from a hash of the id, so string ids work and
+    give the same pairs (and cosines) as integer ids on the same vectors."""
+    from pyspark.sql import functions as F
+
+    from openue_spark.ops.dedup import embedding_near_dup_pairs
+
+    by_int = {
+        (r.a_id, r.b_id, r.cosine_r)
+        for r in embedding_near_dup_pairs(emb, min_cosine=0.5).collect()
+    }
+    str_emb = emb.select(
+        F.format_string("v%03d", "vec_id").alias("vec_id"), "embedding"
+    )
+    by_str = {
+        (min(a, b), max(a, b), r.cosine_r)
+        for r in embedding_near_dup_pairs(str_emb, min_cosine=0.5).collect()
+        for a, b in [(int(r.a_id[1:]), int(r.b_id[1:]))]
+    }
+    assert by_str == by_int and len(by_int) > 0
 
 
 def test_embedding_bucketed_recall_vs_brute_force(spark):

@@ -314,22 +314,11 @@ def test_vocab_file_wordpiece_semantics():
     assert tok.wordpiece("x" * 101) == ["[UNK]"]  # max_input_chars_per_word
 
 
-def test_fused_equals_staged(spark, fixture_turns):
-    """The one-pass fused production path and the staged relational
-    decomposition must emit the identical triple multiset (the staged
-    stages are the oracle-checked reference decomposition; the fused path
-    is the throughput path — neither may drift)."""
-    df = spark.createDataFrame(fixture_turns)
-    fused = Counter(tuple(r) for r in extract_triples(df).collect())
-    staged = Counter(tuple(r) for r in extract_triples(df, fused=False).collect())
-    assert fused == staged and sum(fused.values()) > 50
-
-
 def test_adversarial_texts_parity_and_empty_input(spark):
     """Edge-of-input probes through the REAL pipeline vs the oracle: empty
     text, whitespace-only, unicode/emoji/CJK, a 10k-char single token, a
-    5k-token sentence (truncation bound), punctuation-only. Both physical
-    forms must match the oracle EXACTLY on every one, and an empty input
+    5k-token sentence (truncation bound), punctuation-only. The pipeline
+    must match the oracle EXACTLY on every one, and an empty input
     DataFrame must yield an empty result with the exact triple schema."""
     texts = [
         "",
@@ -348,12 +337,11 @@ def test_adversarial_texts_parity_and_empty_input(spark):
         for t in extract_corpus(rows)
     )
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    for fused in (True, False):
-        got = Counter(
-            (r.conv_id, int(r.turn_idx), r.subj, int(r.rel_id), r.pred, r.obj)
-            for r in extract_triples(df, fused=fused).collect()
-        )
-        assert got == gold, f"fused={fused} diverged on adversarial inputs"
+    got = Counter(
+        (r.conv_id, int(r.turn_idx), r.subj, int(r.rel_id), r.pred, r.obj)
+        for r in extract_triples(df).collect()
+    )
+    assert got == gold, "pipeline diverged on adversarial inputs"
 
     empty = spark.createDataFrame([], "conv_id string, turn_idx int, text string")
     out = extract_triples(empty)

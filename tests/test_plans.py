@@ -18,19 +18,16 @@ def _plan(df) -> str:
 
 
 def test_extraction_plan_is_zero_shuffle(spark):
-    """PLANS.md section 1: NO Exchange anywhere in either extraction plan —
+    """PLANS.md section 1: NO Exchange anywhere in the extraction plan —
     parallelism rides input partitions, so the same plan fans out across
-    1000 executors with no coordination. The fused production path is ONE
-    Python stage (one runner per task); the staged decomposition is two."""
+    1000 executors with no coordination — and ONE Python stage (one
+    runner per task)."""
     from openue_spark.pipeline import extract_triples
 
     df = spark.createDataFrame(transcripts_pandas(64))
-    fused = _plan(extract_triples(df))
-    assert "Exchange" not in fused, fused
-    assert fused.count("MapInPandas") == 1  # one fused model stage
-    staged = _plan(extract_triples(df, fused=False))
-    assert "Exchange" not in staged, staged
-    assert staged.count("MapInPandas") == 2  # the two model stages
+    plan = _plan(extract_triples(df))
+    assert "Exchange" not in plan, plan
+    assert plan.count("MapInPandas") == 1  # one fused model stage
 
 
 def test_serving_plan_is_zero_shuffle(spark):
@@ -107,8 +104,8 @@ def test_linking_broadcast_hints_gated_by_mention_count(spark):
     runtime sizes. Below the ceiling the hints stay (the benched small-SF
     plan). Same edges either way."""
     from openue_spark.pipeline.linking import (
-        candidate_edges,
-        embed_mentions,
+        candidate_edges_from_state,
+        mention_state,
         mention_table,
     )
 
@@ -116,11 +113,10 @@ def test_linking_broadcast_hints_gated_by_mention_count(spark):
     triples = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, subj string, rel_id int, pred string, obj string"
     )
-    mentions = mention_table(triples).persist()
-    embedded = embed_mentions(mentions).persist()
+    state = mention_state(mention_table(triples)).persist()
     try:
-        small = candidate_edges(mentions, embedded, n_mentions=100)
-        big = candidate_edges(mentions, embedded, n_mentions=10**9)
+        small = candidate_edges_from_state(state, n_mentions=100)
+        big = candidate_edges_from_state(state, n_mentions=10**9)
         small_logical = small._jdf.queryExecution().optimizedPlan().toString()
         big_logical = big._jdf.queryExecution().optimizedPlan().toString()
         assert "broadcast" in small_logical.lower(), small_logical
@@ -129,8 +125,7 @@ def test_linking_broadcast_hints_gated_by_mention_count(spark):
         key = lambda r: (r.a_id, r.b_id)  # noqa: E731
         assert sorted(map(key, small.collect())) == sorted(map(key, big.collect()))
     finally:
-        mentions.unpersist()
-        embedded.unpersist()
+        state.unpersist()
 
 
 def test_dedup_groupby_is_partial_aggregated(spark):
