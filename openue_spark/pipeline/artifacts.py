@@ -34,6 +34,8 @@ import pickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 RUN_CONFIG_SCHEMA = "run_id string, ts timestamp, args string, spark_conf string"
 
 CHECKPOINT_SCHEMA = (
@@ -54,7 +56,7 @@ def write_run_config(
         json.dumps({k: str(v) for k, v in sorted(args.items())}, sort_keys=True),
         json.dumps({k: str(v) for k, v in sorted(conf.items())}, sort_keys=True),
     )
-    spark.createDataFrame([row], RUN_CONFIG_SCHEMA).write.mode("append").parquet(
+    local_frame(spark, [row], RUN_CONFIG_SCHEMA).write.mode("append").parquet(
         f"{out_dir}/run_config"
     )
 
@@ -86,7 +88,7 @@ def write_checkpoint(
         len(blob),
         datetime.datetime.now(),
     )
-    spark.createDataFrame([row], CHECKPOINT_SCHEMA).write.mode("append").parquet(
+    local_frame(spark, [row], CHECKPOINT_SCHEMA).write.mode("append").parquet(
         f"{out_dir}/checkpoints"
     )
     return digest

@@ -284,8 +284,10 @@ def inference_text(spark, text: str) -> list[dict]:
     the reference's key names. Driver convenience only — batch jobs go
     through `extract_triples`.
     """
-    df = spark.createDataFrame(
-        [("inference", 0, text)], "conv_id string, turn_idx int, text string"
+    from ..session import local_frame
+
+    df = local_frame(
+        spark, [("inference", 0, text)], "conv_id string, turn_idx int, text string"
     )
     return [
         {"subject": r.subj, "predict": r.pred, "object": r.obj}

@@ -26,12 +26,14 @@ and only executes the remainder — kill the job anywhere and re-submit.
 
 from __future__ import annotations
 
+import os
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .extract import extract_triples
 
 MANIFEST_SCHEMA = (
@@ -112,12 +114,25 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     """The run manifest; empty on a first run (no manifest directory). A
     manifest that exists but cannot be read raises — treating it as "no
     shards done" would silently recompute and append a second lineage."""
-    import os
-
     path = f"{out_dir}/manifest"
     if not os.path.isdir(path):  # local FS probe avoids noisy first-run read
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return local_frame(spark, [], MANIFEST_SCHEMA)
     return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+
+
+def _stage_lineage(spark: SparkSession, out_dir: str, stage: str) -> list:
+    """(shard, weights_sha, input_fingerprint, triple_count) of every
+    manifest row of `stage`, in ONE query — none at all on a first run (no
+    manifest directory). Resume derives all its shard sets from this list
+    in Python, so the manifest costs one query however many sets it feeds."""
+    if not os.path.isdir(f"{out_dir}/manifest"):
+        return []
+    return (
+        read_manifest(spark, out_dir)
+        .where(F.col("stage") == stage)
+        .select("shard", "weights_sha", "input_fingerprint", "triple_count")
+        .collect()
+    )
 
 
 def completed_shards(
@@ -127,15 +142,19 @@ def completed_shards(
     DIFFERENT weights fingerprint (or a pre-fingerprint manifest with a
     null column) does not count — resuming over it would silently mix
     weight regimes in one triple table, so it is re-extracted instead."""
-    m = read_manifest(spark, out_dir).where(F.col("stage") == stage)
-    if weights_sha is not None:
-        m = m.where(F.col("weights_sha") == weights_sha)
-    rows = m.select("shard").distinct().collect()
-    return {r.shard for r in rows}
+    return _done_shards(_stage_lineage(spark, out_dir, stage), weights_sha)
 
 
-def _append_manifest(spark: SparkSession, out_dir: str, row: tuple) -> None:
-    spark.createDataFrame([row], MANIFEST_SCHEMA).write.mode("append").parquet(
+def _done_shards(lineage: list, weights_sha: str | None) -> set[int]:
+    return {
+        r.shard
+        for r in lineage
+        if weights_sha is None or r.weights_sha == weights_sha
+    }
+
+
+def _append_manifest(spark: SparkSession, out_dir: str, rows: list[tuple]) -> None:
+    local_frame(spark, rows, MANIFEST_SCHEMA).write.mode("append").parquet(
         f"{out_dir}/manifest"
     )
 
@@ -162,8 +181,8 @@ def log_stage_metric(
     _append_manifest(
         spark,
         out_dir,
-        (run_id, stage, -1, 0, row_count, triple_count, wall_ms,
-         datetime.datetime.now(), ""),
+        [(run_id, stage, -1, 0, row_count, triple_count, wall_ms,
+          datetime.datetime.now(), "")],
     )
 
 
@@ -209,29 +228,29 @@ def run_extraction_resumable(
     """
     run_id = uuid.uuid4().hex[:12]
     wsha = _weights_sha(weights_bc, tokenizer_bc)
-    manifest = read_manifest(spark, out_dir).where(F.col("stage") == stage)
+    # the stage's manifest rows, read once (no query on a first run)
+    lineage = _stage_lineage(spark, out_dir, stage)
     # a manifest written under a different shard count means the shard->
     # conv_id mapping changed: nothing recorded is reusable, and stale
     # shard=K dirs beyond the new range must not leak into the read-back
-    prior_shards = {r.shard for r in manifest.select("shard").distinct().collect()}
-    if any(s >= n_shards for s in prior_shards):
+    if any(r.shard >= n_shards for r in lineage):
         raise ValueError(
             f"{out_dir} holds manifest rows for shard >= {n_shards}; it was"
             " produced with a different --shards value — use a fresh out"
             " dir or rerun with the original shard count"
         )
-    done = completed_shards(spark, out_dir, stage, weights_sha=wsha)
-    recorded = {
-        r.shard: r
-        for r in manifest.where(F.col("weights_sha") == wsha)
-        .groupBy("shard")
-        .agg(
-            F.max("input_fingerprint").alias("fp"),
-            F.max("triple_count").alias("tc"),
-        )
-        .collect()
-    }
-    recorded_fp = {s: r.fp for s, r in recorded.items()}
+    done = _done_shards(lineage, wsha)
+
+    def recorded_max(col: str) -> dict[int, int]:
+        # per shard under these weights; NULLs ignored, as SQL max does
+        out: dict[int, int] = {}
+        for r in lineage:
+            if r.weights_sha == wsha and r[col] is not None:
+                out[r.shard] = max(r[col], out.get(r.shard, r[col]))
+        return out
+
+    recorded_fp = recorded_max("input_fingerprint")
+    recorded_tc = recorded_max("triple_count")
     sharded = transcripts.withColumn("shard", shard_of(F.col("conv_id"), n_shards))
 
     # ONE stats pass for every shard's (row count, fingerprint). Skipping a
@@ -260,7 +279,7 @@ def run_extraction_resumable(
         _append_manifest(
             spark,
             out_dir,
-            (
+            [(
                 run_id,
                 stage,
                 shard,
@@ -270,7 +289,7 @@ def run_extraction_resumable(
                 int((time.time() - t0) * 1000),
                 __import__("datetime").datetime.now(),
                 wsha,
-            ),
+            )],
         )
 
     missing = [
@@ -329,14 +348,12 @@ def run_extraction_resumable(
             )
             for s in range(n_shards)
         ]
-        spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode("append").parquet(
-            f"{out_dir}/manifest"
-        )
+        _append_manifest(spark, out_dir, rows)
         n_total = sum(counts.get(s, 0) for s in range(n_shards))
     else:
         # resume path: shard-per-job for exactly the missing shards
         n_total = sum(
-            int(recorded[s].tc) for s in range(n_shards) if s not in missing
+            int(recorded_tc[s]) for s in range(n_shards) if s not in missing
         )
         n_done_this_run = 0
         for shard in missing:

@@ -9,10 +9,11 @@ Python-worker memory.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _disable_thp_stalls() -> None:
@@ -56,6 +57,7 @@ def tuning_conf(cores: int = 32, shuffle_partitions: int | None = None) -> dict[
     }
 
 
+@contextlib.contextmanager
 def job_phase(spark: SparkSession, name: str):
     """Label all Spark jobs submitted inside the block with a phase name
     (visible in the UI and the event log — scripts/profile_job.py groups
@@ -64,19 +66,49 @@ def job_phase(spark: SparkSession, name: str):
         with job_phase(spark, "linking"):
             ...
     """
-    import contextlib
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    try:
+        sc.setJobDescription(name if prev is None else f"{prev}/{name}")
+        yield
+    finally:
+        sc.setJobDescription(prev)
 
-    @contextlib.contextmanager
-    def _ctx():
-        sc = spark.sparkContext
-        prev = sc.getLocalProperty("spark.job.description")
-        try:
-            sc.setJobDescription(name if prev is None else f"{prev}/{name}")
-            yield
-        finally:
-            sc.setJobDescription(prev)
 
-    return _ctx()
+# The same label for the steps INSIDE a library call (the fold's link/
+# delta/merge/state-write/graph-write). A second name, bound at import,
+# because a tracer that turns `session.job_phase` blocks into per-layer
+# spans (perfbench's) must not re-attribute a library function's own
+# work: a step label only extends the description of the enclosing span.
+job_step = job_phase
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A driver-built frame (run metadata, manifest rows, a dimension
+    table) as a local Arrow relation.
+
+    `spark.createDataFrame(<list>, ddl)` plans as `Scan ExistingRDD`: every
+    action over it, even a one-row parquet append, runs the pickled rows
+    through Python-worker tasks (one per default-parallelism slice; on
+    local[4], warm: 4 tasks and ~0.4 s per append). The same rows as a
+    `pyarrow.Table` plan as `LocalTableScan` (1 task, ~0.15 s) with the
+    same rows and schema: NULLs stay NULL (pandas would turn a None double
+    into NaN), binary stays byte-exact, and naive timestamps are read as
+    session-time-zone wall time (the row path reads them in the process's
+    local zone; the two agree unless spark.sql.session.timeZone is set
+    away from it)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema, timestamp_utc=False)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=t) for c, t in zip(cols, arrow.types)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(

@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .config import PREDICATES, REL2ID
+from .session import local_frame
 
 # SKE-style record: {"text": ..., "spo_list": [{"subject","predicate","object"}...]}
 CORPUS_SCHEMA = T.StructType(
@@ -164,8 +165,8 @@ def nonempty_gold(corpus: DataFrame) -> DataFrame:
 
 def relations_dim(spark: SparkSession) -> DataFrame:
     """S2: the relation schema as a (pred, rel_id) dimension table."""
-    return spark.createDataFrame(
-        [(p, i) for i, p in enumerate(PREDICATES)], "pred string, rel_id int"
+    return local_frame(
+        spark, [(p, i) for i, p in enumerate(PREDICATES)], "pred string, rel_id int"
     )
 
 
@@ -185,8 +186,8 @@ def read_rel2id_json(spark: SparkSession, path: str) -> DataFrame:
     the file is tiny by construction, like the reference's)."""
     with open(path, encoding="utf-8") as f:
         rel2id = json.load(f)
-    return spark.createDataFrame(
-        sorted(rel2id.items(), key=lambda kv: kv[1]), "pred string, rel_id int"
+    return local_frame(
+        spark, sorted(rel2id.items(), key=lambda kv: kv[1]), "pred string, rel_id int"
     )
 
 

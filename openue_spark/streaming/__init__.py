@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..pipeline import extract_triples
+from ..session import local_frame
 from ..sources import TRANSCRIPT_SCHEMA  # one pinned schema for batch AND stream
 
 
@@ -128,8 +129,8 @@ def stream_fold_sink(
             )
             if seen.limit(1).count() > 0:
                 return  # replayed epoch — already folded
-        spark.createDataFrame(
-            [(int(batch_id), fp)], "batch_id long, fingerprint long"
+        local_frame(
+            spark, [(int(batch_id), fp)], "batch_id long, fingerprint long"
         ).write.mode("append").parquet(manifest)
         raw = extract_triples(batch_df)
         fold_batch_into_kg(

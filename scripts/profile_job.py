@@ -155,7 +155,8 @@ def parse(evdir: str, cores: int) -> None:
     for r in sorted(rows, reverse=True)[:40]:
         print(f"{r[0]:7.1f} {r[1]:7.1f} {r[2]:7.1f} {r[3]:8.1f} {r[4]:7.1f} {r[5]:6d}  {r[6]:<4d} {r[7]}")
 
-    # rollup by phase label (job.py/linking.py set these via job_phase)
+    # rollup by phase label (job.py/linking.py set these via job_phase,
+    # the incremental fold via job_step)
     agg = {}
     for ser, gap, wall, tsum, _tmax, ntasks, _jid, label in rows:
         a = agg.setdefault(label or "<unlabeled>", [0.0, 0.0, 0.0, 0])

@@ -121,3 +121,50 @@ def test_provenance_checkpoint_never_outranks_evaluated(spark, tmp_path):
     write_checkpoint(spark, out, better, metric=0.42, step=1, checkpoint_id="trained")
     _, row = read_best_checkpoint(spark, out)
     assert row.checkpoint_id == "trained"  # low real metric still beats None
+
+
+def test_local_frame_rows_exact_and_no_python_scan(spark, tmp_path):
+    """Driver-built metadata frames go through session.local_frame: a None
+    metric reads back NULL (never NaN — the pandas route's failure), the
+    pickled blob round-trips byte-exact, and no frame the helper builds
+    plans a Python-RDD scan (`ExistingRDD`: Python-worker tasks on every
+    action)."""
+    import math
+    import pickle
+
+    from openue_spark.mock_models import MockWeights
+    from openue_spark.pipeline.artifacts import (
+        CHECKPOINT_SCHEMA,
+        read_checkpoints,
+        write_checkpoint,
+    )
+    from openue_spark.pipeline.materialize import read_manifest
+    from openue_spark.session import local_frame
+    from openue_spark.sources import relations_dim
+
+    out = str(tmp_path / "out")
+    w = MockWeights(seq_cut=0.9, seq_scale=4.0, ner_cuts=np.array([1, 2, 3]))
+    digest = write_checkpoint(spark, out, w, metric=None, step=3, checkpoint_id="prov")
+    (row,) = read_checkpoints(spark, out).collect()
+    assert row.metric is None and not (
+        isinstance(row.metric, float) and math.isnan(row.metric)
+    )
+    assert bytes(row.blob) == pickle.dumps(w, protocol=pickle.HIGHEST_PROTOCOL)
+    assert row.sha256 == digest and row.n_bytes == len(bytes(row.blob))
+
+    frames = {
+        "checkpoint row": local_frame(
+            spark,
+            [("x", 1, None, bytearray(b"\x00\xff"), None, 2, None)],
+            CHECKPOINT_SCHEMA,
+        ),
+        "first-run manifest": read_manifest(spark, str(tmp_path / "fresh")),
+        "relations dim": relations_dim(spark),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, f"{name}: {plan}"
+        assert "LocalTableScan" in plan, f"{name}: {plan}"
+    (ck,) = frames["checkpoint row"].collect()
+    assert ck.metric is None and ck.sha256 is None and bytes(ck.blob) == b"\x00\xff"
+    assert frames["first-run manifest"].count() == 0
